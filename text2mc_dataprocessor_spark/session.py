@@ -15,6 +15,39 @@ from pyspark.sql import SparkSession
 
 _REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+# Driver-heap ceiling for large machines. Below 2× this, the default is
+# half of the memory the host can back: ParallelGC sizes its generations
+# from -Xmx, so a heap larger than RAM grows into memory the box does not
+# have and the OOM killer ends the JVM. The other half is for what the
+# local driver shares the box with — one Python worker per core, Arrow
+# buffers, JVM off-heap.
+_DRIVER_MEM_CEILING_MB = 24 * 1024
+_CGROUP_MEMORY_MAX = "/sys/fs/cgroup/memory.max"
+
+
+def driver_memory() -> str:
+    """``spark.driver.memory`` for :func:`get_spark`.
+
+    A non-empty ``SPARK_GRAFT_DRIVER_MEM`` is used unchanged. Otherwise
+    ``24g`` on hosts with at least 48 GB, else half of host memory in
+    MB — physical RAM, or the cgroup-v2 ``memory.max`` when smaller.
+    """
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    host = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    try:
+        with open(_CGROUP_MEMORY_MAX) as f:
+            limit = f.read().strip()
+    except OSError:
+        limit = ""
+    if limit.isdigit():  # "max" means no limit
+        host = min(host, int(limit))
+    half_mb = host // 2 // 2**20
+    if half_mb >= _DRIVER_MEM_CEILING_MB:
+        return f"{_DRIVER_MEM_CEILING_MB // 1024}g"
+    return f"{half_mb}m"
+
 
 def ship_package(spark: SparkSession) -> None:
     """Make ``text2mc_dataprocessor_spark`` importable inside Python
@@ -52,6 +85,11 @@ def get_spark(
     Arrow channel each) — the honest single-box emulation of a
     multi-executor cluster for N→4N scaling evidence. Shuffle
     partitions default to the total core count.
+
+    ``spark.driver.memory`` (the local-mode heap) comes from
+    :func:`driver_memory`: ``SPARK_GRAFT_DRIVER_MEM`` when set and
+    non-empty, else ``24g`` capped at half of host memory (physical RAM,
+    or the cgroup-v2 ``memory.max`` when smaller).
     """
     gc_threads = None
     if executors is not None:
@@ -84,7 +122,7 @@ def get_spark(
         # batches hundreds of MB per worker; 512 keeps the JVM↔Python
         # pipeline streaming (and costs little on narrow rows)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         # plan-description strings are generated synchronously on every
         # action; iterative round plans can get large — cap the walk
