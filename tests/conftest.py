@@ -11,7 +11,7 @@ from text2mc_dataprocessor_spark.sources.fixtures import generate_corpus  # noqa
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", cores=8, shuffle_partitions=8)
+    s = get_spark("tests", shuffle_partitions=8)
     yield s
 
 

@@ -59,7 +59,7 @@ from ..operators.politeness import (
 )
 from ..operators.seen import PartitionedBloom, dedup_and_split_new
 from ..sources.fetch import TableFetcher
-from ..sources.snapshots import BucketedSnapshotTable, SnapshotTable
+from ..sources.snapshots import BucketedSnapshotTable, Manifest, SnapshotTable
 
 SEEN_SCHEMA = "url string, url_hash long, bucket int"
 #: public schema of ``extracted_df()`` — what the reference's
@@ -152,12 +152,6 @@ class CrawlConfig:
                 "round_interval_ms must be > 0 or None (disabled)")
 
 
-_STATE_TABLES = (
-    "frontier", "seen", "bloom", "extracted", "rawmap", "sizes", "trace",
-    "lineage",
-)
-
-
 class CrawlEngine:
     def __init__(
         self,
@@ -203,6 +197,9 @@ class CrawlEngine:
             artifacts.select("url", "html") if artifacts is not None else None
         )
         self.robots = robots
+        # one manifest + HEAD per version; the tables below only own
+        # their data files (sources/snapshots.py)
+        self.snap = Manifest(workdir)
         self.t_frontier = SnapshotTable(workdir, "frontier")
         self.t_seen = SnapshotTable(workdir, "seen")
         self.t_bloom = SnapshotTable(workdir, "bloom")
@@ -306,87 +303,91 @@ class CrawlEngine:
             "max_seq": int(ms) if ms is not None else -1,
             "trace_count": 0,
         }
-        # the always-empty tables commit as manifest-only snapshots
-        # (commit_empty — no Spark write job for zero rows, r6); the
-        # three real initial commits are independent write jobs — run
-        # them concurrently (same discipline as _commit_state) and
-        # publish the frontier LAST (its HEAD is the consistency
-        # point). The r4 serial form paid 4 separate full frontier
-        # passes back to back plus 4 empty-table write jobs, all on
-        # the driver's critical path.
-        self.t_trace.commit_empty(TRACE_SCHEMA, meta0)
-        self.t_lineage.commit_empty(LINEAGE_SCHEMA, meta0)
-        self.t_extracted.commit_delta(None, meta0)
-        self.t_rawmap.commit_empty(RAWMAP_SCHEMA, meta0)
-        self.t_sizes.commit_empty(SIZES_SCHEMA, meta0)
-        writes = [
-            lambda: self.t_seen.commit(seen0, meta0),
-            lambda: self.t_bloom.commit(bloom0, meta0),
-        ]
-        with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-            list(pool.map(lambda w: w(), writes))
-        self.t_frontier.commit(frontier0, meta0)
+        v = (self.snap.current_version() or 0) + 1
+        # the always-empty tables are manifest-only entries (no Spark
+        # write job for zero rows, r6); the three real initial commits
+        # are independent write jobs — run them concurrently (same
+        # discipline as _commit_state). The r4 serial form paid 4
+        # separate full frontier passes back to back plus 4 empty-table
+        # write jobs, all on the driver's critical path.
+        tables = self._write_all({
+            "seen": lambda: self.t_seen.commit(seen0, v),
+            "bloom": lambda: self.t_bloom.commit(bloom0, v),
+            "frontier": lambda: self.t_frontier.commit(frontier0, v),
+        })
+        tables.update(
+            trace=SnapshotTable.empty(TRACE_SCHEMA),
+            lineage=SnapshotTable.empty(LINEAGE_SCHEMA),
+            extracted=self.t_extracted.commit_delta(None, None, v),
+            rawmap=SnapshotTable.empty(RAWMAP_SCHEMA),
+            sizes=SnapshotTable.empty(SIZES_SCHEMA),
+        )
+        self.snap.commit(v, meta0, tables)
         self._load_state()
 
+    @staticmethod
+    def _write_all(writes: dict[str, Callable[[], dict]]) -> dict[str, dict]:
+        """Run independent table writes concurrently; → their entries."""
+        with ThreadPoolExecutor(max_workers=len(writes)) as pool:
+            futures = {name: pool.submit(w) for name, w in writes.items()}
+        return {name: f.result() for name, f in futures.items()}
+
     def _load_state(self) -> None:
-        """Hydrate in-memory state from the frontier's consistent version."""
-        v = self.version
+        """Hydrate in-memory state from the HEAD version. The resume
+        cursors ride in the manifest meta (written by every commit), so
+        hydrating is O(1) — no full-history count/agg."""
+        m = self.snap.read(self.version)
+        self._hydrate(m["tables"])
+        meta = m["meta"]
+        self._max_seq = int(meta["max_seq"])
+        self._trace_count = int(meta["trace_count"])
+        self._round = int(meta["round"])
+        self._queue_grp_counts = None
+        self._dirty = False
+
+    def _hydrate(self, tables: dict[str, dict]) -> None:
+        """Point the in-memory state at a version's committed files
+        (clean lineage, no dependence on any pre-commit plan)."""
         spark = self.spark
-        main = self.t_frontier.read_main(spark, v)
-        hist = self.t_frontier.read_history(spark, v)
-        queue = main.filter(F.col("state") == "QUEUED")
+        main = SnapshotTable.read_main(spark, tables["frontier"])
         done = main.filter(F.col("state") != "QUEUED")
+        hist = SnapshotTable.read_history(spark, tables["frontier"])
         if hist is not None:
             done = done.unionByName(hist)
         self._state = {
-            "queue": queue,
-            "seen": self.t_seen.read(spark, v),
-            "bloom": self.t_bloom.read(spark, v),
+            "queue": main.filter(F.col("state") == "QUEUED"),
+            "seen": SnapshotTable.read(spark, tables["seen"]),
+            "bloom": SnapshotTable.read(spark, tables["bloom"]),
         }
         self._done_base = done
         self._done_deltas = []
         self._seen_deltas = []
-        self._ext_base = self.t_extracted.read(spark, v)
+        rows = BucketedSnapshotTable.read(spark, tables["extracted"])
+        self._ext_base = rows if rows is not None else self._empty(EXT_ROW_SCHEMA)
         self._ext_deltas = []
-        self._rawmap_main = self.t_rawmap.read_main(spark, v)
-        h = self.t_rawmap.read_history(spark, v)
+        self._rawmap_main = SnapshotTable.read_main(spark, tables["rawmap"])
+        h = SnapshotTable.read_history(spark, tables["rawmap"])
         self._rawmap_sfx_base = h if h is not None else self._empty(RAWMAP_SCHEMA)
         self._rawmap_deltas = []
-        self._sizes_main = self.t_sizes.read_main(spark, v)
-        h = self.t_sizes.read_history(spark, v)
+        self._sizes_main = SnapshotTable.read_main(spark, tables["sizes"])
+        h = SnapshotTable.read_history(spark, tables["sizes"])
         self._sizes_sfx_base = h if h is not None else self._empty(SIZES_SCHEMA)
         self._sizes_deltas = []
-        self._trace_base = self.t_trace.read(spark, v)
+        self._trace_base = SnapshotTable.read(spark, tables["trace"])
         self._trace_deltas = []
-        self._lineage_base = self.t_lineage.read(spark, v)
+        self._lineage_base = SnapshotTable.read(spark, tables["lineage"])
         self._lineage_deltas = []
         self._seen_full_rewrite = False
-        # resume cursors ride in the manifest meta (written by every
-        # commit) — hydrating is O(1), no full-history count/agg; the
-        # fallback computes them only for pre-meta snapshots
-        meta = self.t_frontier.manifest(v)["meta"]
-        if "max_seq" in meta:
-            self._max_seq = int(meta["max_seq"])
-        else:
-            ms = self.frontier_df().agg(F.max("discovered_seq")).first()[0]
-            self._max_seq = int(ms) if ms is not None else -1
-        if "trace_count" in meta:
-            self._trace_count = int(meta["trace_count"])
-        else:
-            self._trace_count = self._trace_base.count()
-        self._round = self.round_number()
-        self._queue_grp_counts = None
-        self._dirty = False
 
     @property
     def version(self) -> int:
-        v = self.t_frontier.current_version()
+        v = self.snap.current_version()
         if v is None:
             raise RuntimeError("engine not initialized — call init(seeds)")
         return v
 
     def round_number(self, version: int | None = None) -> int:
-        return int(self.t_frontier.manifest(version)["meta"]["round"])
+        return int(self.snap.read(version)["meta"]["round"])
 
     def forget(self, urls: DataFrame) -> None:
         """Re-crawl scheduling (the deletable-filter use case): remove
@@ -407,8 +408,7 @@ class CrawlEngine:
         re-crawl history). The next snapshot rewrites the seen table in
         full (append-only history cannot express a delete).
         """
-        if self._state is None:
-            self._load_state()
+        self._ensure_state()
         urls = urls.select("url")
         keyed = urls.select(
             "url",
@@ -431,17 +431,17 @@ class CrawlEngine:
         self._dirty = True
 
     def rollback(self, version: int) -> None:
-        """Resume-from-any-snapshot: point every table at ``version``."""
-        for t in (self.t_frontier, self.t_seen, self.t_bloom, self.t_extracted,
-                  self.t_rawmap, self.t_sizes, self.t_trace, self.t_lineage):
-            t.rollback(version)
+        """Resume-from-any-snapshot: point HEAD at ``version`` (one
+        file) and hydrate from it."""
+        self.snap.publish(version)
         self._load_state()
 
     # -- table accessors ---------------------------------------------------------
-    def _get(self, name: str, table: SnapshotTable) -> DataFrame:
-        if self._state is not None:
-            return self._state[name]
-        return table.read(self.spark, self.version)
+    def _ensure_state(self) -> None:
+        """Hydrate from HEAD on first use (an engine attached to an
+        existing workdir without ``resume``)."""
+        if self._state is None:
+            self._load_state()
 
     @staticmethod
     def _with_deltas(base: DataFrame, deltas: list[DataFrame]) -> DataFrame:
@@ -450,13 +450,13 @@ class CrawlEngine:
         return base
 
     def frontier_df(self) -> DataFrame:
-        if self._state is None:
-            return self.t_frontier.read(self.spark, self.version)
+        self._ensure_state()
         done = self._with_deltas(self._done_base, self._done_deltas)
         return self._state["queue"].unionByName(done)
 
     def seen_df(self) -> DataFrame:
-        return self._get("seen", self.t_seen)
+        self._ensure_state()
+        return self._state["seen"]
 
     def _empty(self, schema: str) -> DataFrame:
         return self.spark.createDataFrame([], schema)
@@ -468,23 +468,8 @@ class CrawlEngine:
         the current state (committed base ∪ in-memory round deltas).
         ``*_main`` are the pre-aggregated key→value maps baked at the
         last fold (≤1 row per key); ``*_sfx`` the raw log suffix since."""
-        spark = self.spark
-        if self._state is None:
-            v = self.version
-            rows = self.t_extracted.read(spark, v)
-            rows = rows if rows is not None else self._empty(EXT_ROW_SCHEMA)
-            rm_sfx = self.t_rawmap.read_history(spark, v)
-            sz_sfx = self.t_sizes.read_history(spark, v)
-            return (
-                rows,
-                self.t_rawmap.read_main(spark, v),
-                rm_sfx if rm_sfx is not None else self._empty(RAWMAP_SCHEMA),
-                self.t_sizes.read_main(spark, v),
-                sz_sfx if sz_sfx is not None else self._empty(SIZES_SCHEMA),
-            )
-        rows = self._ext_base if self._ext_base is not None else self._empty(
-            EXT_ROW_SCHEMA)
-        rows = self._with_deltas(rows, self._ext_deltas)
+        self._ensure_state()
+        rows = self._with_deltas(self._ext_base, self._ext_deltas)
         rm_sfx = self._with_deltas(self._rawmap_sfx_base, self._rawmap_deltas)
         sz_sfx = self._with_deltas(self._sizes_sfx_base, self._sizes_deltas)
         return rows, self._rawmap_main, rm_sfx, self._sizes_main, sz_sfx
@@ -574,21 +559,18 @@ class CrawlEngine:
         )
 
     def trace_df(self) -> DataFrame:
-        if self._state is None:
-            return self.t_trace.read(self.spark, self.version)
+        self._ensure_state()
         return self._with_deltas(self._trace_base, self._trace_deltas)
 
     def lineage_df(self) -> DataFrame:
-        if self._state is None:
-            return self.t_lineage.read(self.spark, self.version)
+        self._ensure_state()
         return self._with_deltas(self._lineage_base, self._lineage_deltas)
 
     # -- driving ---------------------------------------------------------------
     def run(self, rounds: int | None = None) -> int:
         """Run until the frontier drains (or ``rounds``); → rounds executed.
         Always leaves a committed snapshot at the end."""
-        if self._state is None:
-            self._load_state()
+        self._ensure_state()
         done = 0
         while rounds is None or done < rounds:
             if not self._one_round():
@@ -619,8 +601,7 @@ class CrawlEngine:
         (|hosts| ≪ |urls|); pass False for URL-keyed scores, which
         then hash-join on the queue's own key. Returns
         ``{"rescored": <matched row count>}``."""
-        if self._state is None:
-            self._load_state()
+        self._ensure_state()
         # ONE validation job for both contract checks (integral scores,
         # unique keys) — URL-level scores are |queue|-sized, so two
         # separate full-scan actions here roughly doubled rescore
@@ -682,6 +663,7 @@ class CrawlEngine:
 
     def _commit_state(self) -> None:
         v = self.version + 1
+        parent = self.snap.read(v - 1)["tables"]
         meta = {
             "round": self._round,
             "max_seq": self._max_seq,
@@ -700,10 +682,9 @@ class CrawlEngine:
         # segments into one dir (full rewrite at that commit — O(size/K)
         # amortized), bounding read fan-in on thousand-round crawls;
         # extracted compacts per-bucket inside commit_delta.
-        # All write jobs run concurrently; HEAD publication then happens
-        # in strict order with the frontier LAST — its version is the
-        # round's consistency point, so it must never land before the
-        # others.
+        # All write jobs run concurrently; the version's one manifest
+        # and HEAD are written only after every one has finished, so a
+        # failure anywhere leaves the previous version current.
         k = self.cfg.compact_history_every
         fold = k is not None and v % k == 0
 
@@ -765,51 +746,45 @@ class CrawlEngine:
 
         def commit_growing(table, deltas, full_df):
             if fold:
-                table.commit(full_df, meta, version=v, publish=False)
-            else:
-                table.commit_append(
-                    self._union_or_none(deltas), meta, version=v, publish=False)
+                return table.commit(full_df, v)
+            return table.commit_append(
+                parent[table.name], self._union_or_none(deltas), v)
 
-        writes = [
-            lambda: commit_growing(
+        tables = self._write_all({
+            "trace": lambda: commit_growing(
                 self.t_trace, self._trace_deltas,
                 self._with_deltas(self._trace_base, self._trace_deltas)),
-            lambda: commit_growing(
+            "lineage": lambda: commit_growing(
                 self.t_lineage, self._lineage_deltas,
                 self._with_deltas(self._lineage_base, self._lineage_deltas)),
-            lambda: (
+            "seen": lambda: (
                 # forget() shrank the seen set — append-only history
                 # can't express a delete, so this commit rewrites seen
                 # in full (rare: only re-crawl scheduling triggers it)
-                self.t_seen.commit(s["seen"], meta, version=v, publish=False)
+                self.t_seen.commit(s["seen"], v)
                 if self._seen_full_rewrite or fold
                 else self.t_seen.commit_append(
-                    self._union_or_none(self._seen_deltas), meta, version=v,
-                    publish=False)
+                    parent["seen"], self._union_or_none(self._seen_deltas), v)
             ),
-            lambda: (
-                self.t_extracted.commit_full(
-                    ext_resolved, meta, version=v, publish=False)
+            "extracted": lambda: (
+                self.t_extracted.commit_full(ext_resolved, v)
                 if fold
                 else self.t_extracted.commit_delta(
-                    ext_delta, meta, version=v, publish=False, spark=self.spark)
+                    parent["extracted"], ext_delta, v, spark=self.spark)
             ),
-            lambda: (
-                # fold: main becomes the aggregated map, history resets
-                self.t_rawmap.commit(fold_fill, meta, version=v, publish=False)
-                if fold
+            # fold: main becomes the aggregated map, history resets
+            "rawmap": lambda: (
+                self.t_rawmap.commit(fold_fill, v) if fold
                 else self.t_rawmap.commit_append(
-                    self._union_or_none(self._rawmap_deltas), meta, version=v,
-                    publish=False)
+                    parent["rawmap"], self._union_or_none(self._rawmap_deltas),
+                    v)
             ),
-            lambda: (
-                self.t_sizes.commit(fold_szs, meta, version=v, publish=False)
-                if fold
+            "sizes": lambda: (
+                self.t_sizes.commit(fold_szs, v) if fold
                 else self.t_sizes.commit_append(
-                    self._union_or_none(self._sizes_deltas), meta, version=v,
-                    publish=False)
+                    parent["sizes"], self._union_or_none(self._sizes_deltas), v)
             ),
-            lambda: self.t_bloom.commit(
+            "bloom": lambda: self.t_bloom.commit(
                 # the bitmap table is n_buckets rows spread over a full
                 # shuffle-partition fan-out; size the write from its
                 # known byte volume (bits/8 per bucket, ~256 MB per
@@ -819,58 +794,18 @@ class CrawlEngine:
                     (getattr(self.bloom, "n_bits", 0) // 8)
                     * self.cfg.n_buckets // (256 << 20) + 1,
                 ))),
-                meta, version=v, publish=False),
-            lambda: (
-                # frontier fold keeps the main=queue / history=done
-                # SPLIT (later incremental commits rewrite main): the
-                # accumulated done history compacts into one segment
-                self.t_frontier.commit_with_history(
-                    s["queue"],
-                    self._with_deltas(self._done_base, self._done_deltas),
-                    meta, version=v, publish=False, reset_history=True)
-                if fold
-                else self.t_frontier.commit_with_history(
-                    s["queue"], self._union_or_none(self._done_deltas), meta,
-                    version=v, publish=False)
-            ),
-        ]
-        with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-            list(pool.map(lambda w: w(), writes))
-        for t in (self.t_trace, self.t_lineage, self.t_seen,
-                  self.t_extracted, self.t_rawmap, self.t_sizes,
-                  self.t_bloom, self.t_frontier):
-            t.publish_version(v)
-        # re-point state at the committed files (clean lineage, no
-        # dependence on the pre-commit plan)
-        spark = self.spark
-        main = self.t_frontier.read_main(spark, v)
-        hist = self.t_frontier.read_history(spark, v)
-        done = main.filter(F.col("state") != "QUEUED")
-        if hist is not None:
-            done = done.unionByName(hist)
-        self._state = {
-            "queue": main.filter(F.col("state") == "QUEUED"),
-            "seen": self.t_seen.read(spark, v),
-            "bloom": self.t_bloom.read(spark, v),
-        }
-        self._done_base = done
-        self._done_deltas = []
-        self._seen_deltas = []
-        self._ext_base = self.t_extracted.read(spark, v)
-        self._ext_deltas = []
-        self._rawmap_main = self.t_rawmap.read_main(spark, v)
-        h = self.t_rawmap.read_history(spark, v)
-        self._rawmap_sfx_base = h if h is not None else self._empty(RAWMAP_SCHEMA)
-        self._rawmap_deltas = []
-        self._sizes_main = self.t_sizes.read_main(spark, v)
-        h = self.t_sizes.read_history(spark, v)
-        self._sizes_sfx_base = h if h is not None else self._empty(SIZES_SCHEMA)
-        self._sizes_deltas = []
-        self._trace_base = self.t_trace.read(spark, v)
-        self._trace_deltas = []
-        self._lineage_base = self.t_lineage.read(spark, v)
-        self._lineage_deltas = []
-        self._seen_full_rewrite = False
+                v),
+            # frontier fold keeps the main=queue / history=done SPLIT
+            # (later incremental commits rewrite main): the accumulated
+            # done history compacts into one segment
+            "frontier": lambda: self.t_frontier.commit_with_history(
+                parent["frontier"], s["queue"],
+                self._with_deltas(self._done_base, self._done_deltas) if fold
+                else self._union_or_none(self._done_deltas),
+                v, reset_history=fold),
+        })
+        self.snap.commit(v, meta, tables)
+        self._hydrate(tables)
         for df in self._pending_unpersist:
             df.unpersist()
         self._pending_unpersist.clear()
@@ -1276,8 +1211,8 @@ class CrawlEngine:
             self._queue_grp_counts = {g: n for g, n in gc_counts.items() if n > 0}
 
         # ---- publish the round: in-memory state always; snapshot commit
-        # at the configured cadence (frontier commit last = the round's
-        # consistency point). Append-only sides (done/seen/trace/lineage
+        # at the configured cadence (one manifest + HEAD per version).
+        # Append-only sides (done/seen/trace/lineage
         # deltas) stay as lazy views over this round's cached
         # intermediates until the commit appends them as history
         # segments. coalesce: each round's unions would otherwise stack
@@ -1361,16 +1296,20 @@ class CrawlEngine:
         cls,
         spark: SparkSession,
         workdir: str,
-        pages: DataFrame,
+        pages: DataFrame | None,
         robots: DataFrame | None = None,
         config: CrawlConfig | None = None,
         version: int | None = None,
+        fetch_fn: Callable[[DataFrame], DataFrame] | None = None,
+        artifacts: DataFrame | None = None,
     ) -> "CrawlEngine":
-        """Attach to an existing crawl at ``version`` (default: latest
-        consistent). Mid-round crashes leave trailing tables one version
-        ahead — the frontier's version is the consistency point."""
-        eng = cls(spark, workdir, pages, robots, config)
-        target = version if version is not None else eng.t_frontier.current_version()
+        """Attach to an existing crawl at ``version`` (default: HEAD).
+        Every published version is whole: a crash mid-commit leaves
+        HEAD at the previous version, and that attempt's files are
+        never read. ``fetch_fn`` / ``artifacts`` are the constructor's —
+        a crawl resumes with the same fetch stage it was built with."""
+        eng = cls(spark, workdir, pages, robots, config, fetch_fn, artifacts)
+        target = version if version is not None else eng.snap.current_version()
         if target is None:
             raise RuntimeError(f"nothing to resume in {workdir}")
         eng.rollback(target)

@@ -8,15 +8,23 @@ Parquet + JSON manifests (SURVEY §7.5 anticipated exactly this
 fallback; the crawl loop only talks to this interface, so swapping in
 Iceberg is a one-module change).
 
-Layout per table::
+Layout of a snapshot root (one crawl workdir)::
 
-    <root>/<name>/data/v{N}-{token}/*.parquet   immutable data files
-    <root>/<name>/manifests/v{N}.json           {version, path, meta, parent}
-    <root>/<name>/HEAD                          current version (atomic rename)
+    <root>/<table>/data/v{N}-{token}*/*.parquet   immutable data files
+    <root>/manifests/v{N}.json                    {version, parent, meta,
+                                                   tables: {name: entry}}
+    <root>/HEAD                                   current version
 
-Commit protocol: write data dir → write manifest → atomically replace
-HEAD. A reader at any moment sees a complete snapshot. ``read(version=k)``
-is Iceberg's ``VERSION AS OF k``; ``rollback(k)`` rewrites HEAD.
+A version is a root-level object: ONE manifest lists every table's
+entry — what that table's snapshot is made of (``path``, ``history``,
+``buckets``, ``schema``). Table writes own no version: each takes the
+parent's entry and returns the new one, and ``Manifest.commit`` writes
+the manifest, then atomically replaces HEAD. HEAD is the only
+consistency point, so a crash anywhere before its rename leaves the
+previous version current and whole (the orphaned data dirs and
+manifest of the half-written version are inert and overwritten by the
+next commit of that version). ``read(entry)`` of any version's entry
+is Iceberg's ``VERSION AS OF``; ``Manifest.publish(k)`` is rollback.
 
 Checkpoint/resume semantics mirror the reference's periodic whole-CSV
 rewrite (/root/reference/scraper/selenium_scraper.py:134-135,181-182)
@@ -56,106 +64,124 @@ def _schema_from_json(schema_json: str) -> T.StructType:
     return _force_nullable(T.StructType.fromJson(json.loads(schema_json)))
 
 
+def _check_schema(pinned_json: str | None, schema: T.StructType,
+                  what: str) -> None:
+    """Reads pin every segment to the entry's one schema, so a delta
+    whose columns differ would be silently cut down to it (or fail at
+    read time). Refuse it at commit time instead."""
+    if pinned_json is None:
+        return
+    want = {f.name: f.dataType for f in _schema_from_json(pinned_json).fields}
+    got = {f.name: f.dataType for f in _force_nullable(schema).fields}
+    if got != want:
+        raise ValueError(
+            f"{what}: delta schema {schema.simpleString()} does not match "
+            f"the pinned {_schema_from_json(pinned_json).simpleString()}"
+        )
+
+
 def _read_parquet(spark: SparkSession, paths: list[str],
-                  schema_json: str | None) -> DataFrame:
-    """Read parquet with the writer schema recorded in the manifest
-    when available — each schema-less ``spark.read.parquet`` pays a
-    driver-side footer-inference job per call, pure fixed cost on every
-    snapshot read (r6, guide §6); old manifests without a stored schema
-    fall back to inference."""
-    reader = spark.read
-    if schema_json:
-        reader = reader.schema(_schema_from_json(schema_json))
-    return reader.parquet(*paths)
+                  schema_json: str) -> DataFrame:
+    """Read parquet with the writer schema recorded in the entry — each
+    schema-less ``spark.read.parquet`` pays a driver-side footer
+    -inference job per call, pure fixed cost on every snapshot read
+    (r6, guide §6)."""
+    return spark.read.schema(_schema_from_json(schema_json)).parquet(*paths)
+
+
+def _empty_frame(spark: SparkSession, entry: dict[str, Any]) -> DataFrame:
+    return spark.createDataFrame([], _schema_from_json(entry["schema"]))
+
+
+class Manifest:
+    """The version log of a snapshot root: one manifest per version and
+    one HEAD, published with a single ``os.replace``."""
+
+    def __init__(self, root: str):
+        self.root = root
+        os.makedirs(os.path.join(root, "manifests"), exist_ok=True)
+
+    def _path(self, version: int) -> str:
+        return os.path.join(self.root, "manifests", f"v{version}.json")
+
+    def current_version(self) -> int | None:
+        head = os.path.join(self.root, "HEAD")
+        if not os.path.exists(head):
+            return None
+        with open(head) as f:
+            return int(f.read().strip())
+
+    def read(self, version: int | None = None) -> dict[str, Any]:
+        version = version if version is not None else self.current_version()
+        if version is None:
+            raise FileNotFoundError(f"no snapshot in {self.root}")
+        with open(self._path(version)) as f:
+            return json.load(f)
+
+    def commit(self, version: int, meta: dict[str, Any],
+               tables: dict[str, dict[str, Any]]) -> None:
+        """Write version ``version``'s manifest, then publish it. An
+        existing manifest of that version (a crashed attempt, or the
+        future of a rolled-back version) is replaced."""
+        manifest = {
+            "version": version,
+            "parent": version - 1 if version > 1 else None,
+            "meta": meta,
+            "tables": tables,
+        }
+        path = self._path(version)
+        with open(path + ".tmp", "w") as f:
+            json.dump(manifest, f)
+        os.replace(path + ".tmp", path)
+        self.publish(version)
+
+    def publish(self, version: int) -> None:
+        """Atomically point HEAD at an already-written version — the
+        commit point, and the whole of a rollback."""
+        if not os.path.exists(self._path(version)):
+            raise ValueError(f"unknown version {version}")
+        head_tmp = os.path.join(self.root, "HEAD.tmp")
+        with open(head_tmp, "w") as f:
+            f.write(str(version))
+        os.replace(head_tmp, os.path.join(self.root, "HEAD"))
 
 
 class SnapshotTable:
+    """Data files of one table. Writes take the parent's entry (None
+    for a table's first write) and return the new entry; reads take an
+    entry. ``version`` only names the data dirs a write creates."""
+
     def __init__(self, root: str, name: str):
         self.dir = os.path.join(root, name)
         self.name = name
         os.makedirs(os.path.join(self.dir, "data"), exist_ok=True)
-        os.makedirs(os.path.join(self.dir, "manifests"), exist_ok=True)
+
+    def _data_path(self, version: int, token: str, suffix: str = "") -> str:
+        return os.path.join(self.dir, "data", f"v{version}-{token}{suffix}")
 
     # -- write --------------------------------------------------------------
-    def commit(self, df: DataFrame, meta: dict[str, Any] | None = None,
-               version: int | None = None, publish: bool = True) -> int:
-        """Atomic snapshot commit. Explicit ``version`` lets a resumed
-        round re-publish the same target version after a mid-round crash
-        (the orphaned data dir of the half-committed attempt is inert).
-
-        ``publish=False`` writes the data files + manifest but leaves
-        HEAD untouched — the snapshot exists (``read(version=…)`` works,
-        readers of HEAD still see the previous one) until
-        ``publish_version`` moves HEAD. This lets a multi-table commit
-        run every table's write job concurrently and still publish in a
-        strict order (the crawl publishes the frontier last — its HEAD
-        is the round's consistency point)."""
-        if version is None:
-            parent = self.current_version()
-            version = (parent or 0) + 1
-        else:
-            parent = version - 1 if version > 1 else None
-        token = uuid.uuid4().hex[:8]
-        data_path = os.path.join(self.dir, "data", f"v{version}-{token}")
+    def commit(self, df: DataFrame, version: int) -> dict[str, Any]:
+        """Full rewrite: ``df`` becomes the whole snapshot."""
+        data_path = self._data_path(version, uuid.uuid4().hex[:8])
         df.write.mode("errorifexists").parquet(data_path)
-        manifest = {
-            "version": version,
-            "parent": parent,
-            "path": data_path,
-            "schema": df.schema.json(),
-            "meta": meta or {},
-        }
-        mpath = os.path.join(self.dir, "manifests", f"v{version}.json")
-        with open(mpath + ".tmp", "w") as f:
-            json.dump(manifest, f)
-        os.replace(mpath + ".tmp", mpath)
-        if publish:
-            self.publish_version(version)
-        return version
+        return {"path": data_path, "schema": df.schema.json()}
 
-    def commit_empty(self, schema: T.StructType | str,
-                     meta: dict[str, Any] | None = None,
-                     version: int | None = None,
-                     publish: bool = True) -> int:
-        """Commit a KNOWN-empty snapshot without any Spark write job:
-        the manifest records ``path: null`` plus the schema, and every
-        reader synthesizes an empty frame from it. The engine's
-        ``init_frontier`` seeds five always-empty tables this way — the
-        old form paid one parquet write job per table for zero rows
-        (r6, pure fixed cost)."""
+    @staticmethod
+    def empty(schema: T.StructType | str) -> dict[str, Any]:
+        """Entry of a KNOWN-empty snapshot, without any Spark write job:
+        ``path: null`` plus the schema, from which every reader
+        synthesizes an empty frame. The engine's ``init_frontier`` seeds
+        five always-empty tables this way — the old form paid one
+        parquet write job per table for zero rows (r6, pure fixed
+        cost)."""
         if isinstance(schema, str):
             schema = T._parse_datatype_string(schema)
-        if version is None:
-            parent = self.current_version()
-            version = (parent or 0) + 1
-        else:
-            parent = version - 1 if version > 1 else None
-        manifest = {
-            "version": version,
-            "parent": parent,
-            "path": None,
-            "schema": schema.json(),
-            "meta": meta or {},
-        }
-        mpath = os.path.join(self.dir, "manifests", f"v{version}.json")
-        with open(mpath + ".tmp", "w") as f:
-            json.dump(manifest, f)
-        os.replace(mpath + ".tmp", mpath)
-        if publish:
-            self.publish_version(version)
-        return version
-
-    def publish_version(self, version: int) -> None:
-        """Atomically point HEAD at an already-written snapshot."""
-        head_tmp = os.path.join(self.dir, "HEAD.tmp")
-        with open(head_tmp, "w") as f:
-            f.write(str(version))
-        os.replace(head_tmp, os.path.join(self.dir, "HEAD"))
+        return {"path": None, "schema": schema.json()}
 
     # -- incremental commits --------------------------------------------------
-    # Iceberg-manifest-style append: a version may carry, besides its
+    # Iceberg-manifest-style append: an entry may carry, besides its
     # (rewritten) main data dir, a HISTORY list of immutable data dirs
-    # inherited from the parent version plus this commit's delta. Only
+    # inherited from the parent entry plus this commit's delta. Only
     # the delta is written; every inherited dir is byte-reused across
     # versions — the fix for "full-table rewrite per checkpoint" on
     # monotonically growing tables (trace, lineage, seen, crawl 'done'
@@ -163,127 +189,71 @@ class SnapshotTable:
     # VERSION AS OF / rollback semantics are unchanged (manifests are
     # immutable and self-contained).
 
-    def commit_with_history(self, main_df: DataFrame | None,
-                            delta_df: DataFrame | None,
-                            meta: dict[str, Any] | None = None,
-                            version: int | None = None,
-                            publish: bool = True,
-                            reset_history: bool = False) -> int:
+    def commit_with_history(self, parent: dict[str, Any] | None,
+                            main_df: DataFrame | None,
+                            delta_df: DataFrame | None, version: int,
+                            reset_history: bool = False) -> dict[str, Any]:
         """Write ``main_df`` (or reuse the parent's main dir if None)
         plus an appended ``delta_df`` history segment (if not None).
         ``reset_history=True`` drops the inherited segment list so the
         written delta becomes the ONLY history segment — the compaction
         commit: ``delta_df`` must then be the full accumulated history
-        (parent manifests still pin the old segments for time travel)."""
-        if version is None:
-            parent = self.current_version()
-            version = (parent or 0) + 1
-        else:
-            parent = version - 1 if version > 1 else None
-        parent_manifest = self.manifest(parent) if parent else None
+        (parent manifests still pin the old segments for time travel).
+        A delta whose columns differ from the pinned schema raises
+        ``ValueError``."""
         history = (
-            [] if reset_history
-            else list(parent_manifest.get("history", [])) if parent_manifest
-            else []
+            [] if reset_history or parent is None
+            else list(parent.get("history", []))
         )
         token = uuid.uuid4().hex[:8]
         if main_df is not None:
-            data_path = os.path.join(self.dir, "data", f"v{version}-{token}")
+            data_path = self._data_path(version, token)
             main_df.write.mode("errorifexists").parquet(data_path)
             schema_json = main_df.schema.json()
         else:
-            if parent_manifest is None:
+            if parent is None:
                 raise ValueError("first commit needs a main DataFrame")
-            data_path = parent_manifest["path"]  # byte-reused (may be None)
-            schema_json = parent_manifest.get("schema")
+            data_path = parent["path"]  # byte-reused (may be None)
+            schema_json = parent["schema"]
         if delta_df is not None:
-            delta_path = os.path.join(self.dir, "data", f"v{version}-{token}-delta")
+            _check_schema(schema_json, delta_df.schema, self.name)
+            delta_path = self._data_path(version, token, "-delta")
             delta_df.write.mode("errorifexists").parquet(delta_path)
             history.append(delta_path)
-            if schema_json is None:
-                schema_json = delta_df.schema.json()
-        manifest = {
-            "version": version,
-            "parent": parent,
-            "path": data_path,
-            "history": history,
-            "meta": meta or {},
-        }
-        if schema_json is not None:
-            manifest["schema"] = schema_json
-        mpath = os.path.join(self.dir, "manifests", f"v{version}.json")
-        with open(mpath + ".tmp", "w") as f:
-            json.dump(manifest, f)
-        os.replace(mpath + ".tmp", mpath)
-        if publish:
-            self.publish_version(version)
-        return version
+        return {"path": data_path, "history": history, "schema": schema_json}
 
-    def commit_append(self, delta_df: DataFrame | None,
-                      meta: dict[str, Any] | None = None,
-                      version: int | None = None,
-                      publish: bool = True) -> int:
+    def commit_append(self, parent: dict[str, Any],
+                      delta_df: DataFrame | None,
+                      version: int) -> dict[str, Any]:
         """Append-only commit: parent's data dirs are all byte-reused;
         only the delta is written."""
-        return self.commit_with_history(None, delta_df, meta, version, publish)
-
-    def read_main(self, spark: SparkSession, version: int | None = None) -> DataFrame:
-        """Only the main (rewritten) part of a snapshot."""
-        m = self.manifest(version)
-        if m["path"] is None:  # commit_empty lineage — no data files
-            return spark.createDataFrame([], _schema_from_json(m["schema"]))
-        return _read_parquet(spark, [m["path"]], m.get("schema"))
-
-    def read_history(self, spark: SparkSession,
-                     version: int | None = None) -> DataFrame | None:
-        """Only the appended history segments (None if there are none)."""
-        m = self.manifest(version)
-        paths = m.get("history", [])
-        if not paths:
-            return None
-        return _read_parquet(spark, paths, m.get("schema"))
+        return self.commit_with_history(parent, None, delta_df, version)
 
     # -- read ---------------------------------------------------------------
-    def current_version(self) -> int | None:
-        head = os.path.join(self.dir, "HEAD")
-        if not os.path.exists(head):
+    @staticmethod
+    def read_main(spark: SparkSession, entry: dict[str, Any]) -> DataFrame:
+        """Only the main (rewritten) part of a snapshot."""
+        if entry["path"] is None:  # empty() lineage — no data files
+            return _empty_frame(spark, entry)
+        return _read_parquet(spark, [entry["path"]], entry["schema"])
+
+    @staticmethod
+    def read_history(spark: SparkSession,
+                     entry: dict[str, Any]) -> DataFrame | None:
+        """Only the appended history segments (None if there are none)."""
+        paths = entry.get("history", [])
+        if not paths:
             return None
-        with open(head) as f:
-            return int(f.read().strip())
+        return _read_parquet(spark, paths, entry["schema"])
 
-    def manifest(self, version: int | None = None) -> dict[str, Any]:
-        version = version if version is not None else self.current_version()
-        if version is None:
-            raise FileNotFoundError(f"no snapshot in {self.dir}")
-        with open(os.path.join(self.dir, "manifests", f"v{version}.json")) as f:
-            return json.load(f)
-
-    def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
-        """VERSION AS OF ``version`` (default: latest) — main ∪ history."""
-        m = self.manifest(version)
-        paths = [p for p in [m["path"], *m.get("history", [])]
+    @staticmethod
+    def read(spark: SparkSession, entry: dict[str, Any]) -> DataFrame:
+        """The whole snapshot ``entry`` describes — main ∪ history."""
+        paths = [p for p in [entry["path"], *entry.get("history", [])]
                  if p is not None]
-        if not paths:  # commit_empty with no appended history yet
-            return spark.createDataFrame([], _schema_from_json(m["schema"]))
-        return _read_parquet(spark, paths, m.get("schema"))
-
-    def versions(self) -> list[int]:
-        out = []
-        for fn in os.listdir(os.path.join(self.dir, "manifests")):
-            if fn.startswith("v") and fn.endswith(".json"):
-                out.append(int(fn[1:-5]))
-        return sorted(out)
-
-    def rollback(self, version: int) -> None:
-        if version not in self.versions():
-            raise ValueError(f"unknown version {version}")
-        head_tmp = os.path.join(self.dir, "HEAD.tmp")
-        with open(head_tmp, "w") as f:
-            f.write(str(version))
-        os.replace(head_tmp, os.path.join(self.dir, "HEAD"))
-
-    def exists(self) -> bool:
-        return self.current_version() is not None
+        if not paths:  # empty() with no appended history yet
+            return _empty_frame(spark, entry)
+        return _read_parquet(spark, paths, entry["schema"])
 
 
 class BucketedSnapshotTable(SnapshotTable):
@@ -324,25 +294,19 @@ class BucketedSnapshotTable(SnapshotTable):
                     out[int(fn.split("=", 1)[1])] = os.path.join(path, fn)
         return out
 
-    def commit_delta(self, delta_df: DataFrame | None,
-                     meta: dict[str, Any] | None = None,
-                     version: int | None = None, publish: bool = True,
-                     spark: SparkSession | None = None) -> int:
+    def commit_delta(self, parent: dict[str, Any] | None,
+                     delta_df: DataFrame | None, version: int,
+                     spark: SparkSession | None = None) -> dict[str, Any]:
         """Append ``delta_df`` (with ``_bkt``) as one new segment per
-        materialized bucket; compact any bucket whose list overflows."""
-        if version is None:
-            parent = self.current_version()
-            version = (parent or 0) + 1
-        else:
-            parent = version - 1 if version > 1 else None
-        parent_manifest = self.manifest(parent) if parent else None
+        materialized bucket; compact any bucket whose list overflows.
+        A delta whose columns differ from the pinned schema raises
+        ``ValueError``."""
         buckets: dict[str, list[str]] = (
-            {k: list(v) for k, v in parent_manifest.get("buckets", {}).items()}
-            if parent_manifest else {}
+            {k: list(v) for k, v in parent.get("buckets", {}).items()}
+            if parent else {}
         )
         token = uuid.uuid4().hex[:8]
-        schema_json = (
-            parent_manifest.get("schema") if parent_manifest else None)
+        schema_json = parent.get("schema") if parent else None
         if delta_df is not None:
             from pyspark.sql import functions as F
 
@@ -350,8 +314,10 @@ class BucketedSnapshotTable(SnapshotTable):
             # readers open bucket dirs directly, so the partition column
             # is absent from their frames — store the bucket-stripped
             # writer schema
-            schema_json = delta_df.drop("_bkt").schema.json()
-            delta_dir = os.path.join(self.dir, "data", f"v{version}-{token}-delta")
+            delta_schema = delta_df.drop("_bkt").schema
+            _check_schema(schema_json, delta_schema, self.name)
+            schema_json = delta_schema.json()
+            delta_dir = self._data_path(version, token, "-delta")
             # cluster by bucket before the partitioned write: otherwise
             # every input partition opens a writer per bucket it sees —
             # up to P·tasks small files per commit; hash-clustered, each
@@ -381,31 +347,19 @@ class BucketedSnapshotTable(SnapshotTable):
                     for b, paths in overflow.items()
                 ],
             )
-            fold_dir = os.path.join(self.dir, "data", f"v{version}-{token}-fold")
+            fold_dir = self._data_path(version, token, "-fold")
             fold = fold.repartition(F.col("_bkt"))
             fold.write.mode("errorifexists").partitionBy("_bkt").parquet(fold_dir)
             folded = self._materialized_buckets(fold_dir)
             for b in overflow:
                 # a bucket whose rows all filtered out still resets to []
                 buckets[str(b)] = [folded[b]] if b in folded else []
-        manifest = {
-            "version": version,
-            "parent": parent,
-            "buckets": buckets,
-            "meta": meta or {},
-        }
+        entry: dict[str, Any] = {"buckets": buckets}
         if schema_json is not None:
-            manifest["schema"] = schema_json
-        mpath = os.path.join(self.dir, "manifests", f"v{version}.json")
-        with open(mpath + ".tmp", "w") as f:
-            json.dump(manifest, f)
-        os.replace(mpath + ".tmp", mpath)
-        if publish:
-            self.publish_version(version)
-        return version
+            entry["schema"] = schema_json
+        return entry
 
-    def commit_full(self, df: DataFrame, meta: dict[str, Any] | None = None,
-                    version: int | None = None, publish: bool = True) -> int:
+    def commit_full(self, df: DataFrame, version: int) -> dict[str, Any]:
         """Rewrite the WHOLE table: every materialized bucket becomes one
         segment and every inherited segment list is dropped (parent
         manifests still pin the old files for time travel). This is the
@@ -413,55 +367,39 @@ class BucketedSnapshotTable(SnapshotTable):
         ``compact_history_every`` cadence to bake merge-on-read fills
         into the rows (O(table) every K commits → O(table/K) amortized,
         the same bound as the other history folds)."""
-        if version is None:
-            parent = self.current_version()
-            version = (parent or 0) + 1
-        else:
-            parent = version - 1 if version > 1 else None
         from pyspark.sql import functions as F
 
-        token = uuid.uuid4().hex[:8]
-        full_dir = os.path.join(self.dir, "data", f"v{version}-{token}-full")
+        full_dir = self._data_path(version, uuid.uuid4().hex[:8], "-full")
         df.repartition(F.col("_bkt")).write.mode("errorifexists") \
             .partitionBy("_bkt").parquet(full_dir)
-        buckets = {
-            str(b): [p] for b, p in self._materialized_buckets(full_dir).items()
-        }
-        manifest = {
-            "version": version,
-            "parent": parent,
-            "buckets": buckets,
+        return {
+            "buckets": {
+                str(b): [p]
+                for b, p in self._materialized_buckets(full_dir).items()
+            },
             "schema": df.drop("_bkt").schema.json(),
-            "meta": meta or {},
         }
-        mpath = os.path.join(self.dir, "manifests", f"v{version}.json")
-        with open(mpath + ".tmp", "w") as f:
-            json.dump(manifest, f)
-        os.replace(mpath + ".tmp", mpath)
-        if publish:
-            self.publish_version(version)
-        return version
 
-    def bucket_paths(self, version: int | None = None) -> dict[int, list[str]]:
-        m = self.manifest(version)
-        return {int(b): list(p) for b, p in m.get("buckets", {}).items()}
+    @staticmethod
+    def bucket_paths(entry: dict[str, Any]) -> dict[int, list[str]]:
+        return {int(b): list(p) for b, p in entry.get("buckets", {}).items()}
 
-    def read(self, spark: SparkSession, version: int | None = None) -> DataFrame | None:
-        m = self.manifest(version)
-        paths = [p for ps in m.get("buckets", {}).values() for p in ps]
+    @staticmethod
+    def read(spark: SparkSession, entry: dict[str, Any]) -> DataFrame | None:
+        paths = [p for ps in entry.get("buckets", {}).values() for p in ps]
         if not paths:
             return None
-        return _read_parquet(spark, paths, m.get("schema"))
+        return _read_parquet(spark, paths, entry["schema"])
 
-    def read_buckets(self, spark: SparkSession, buckets,
-                     version: int | None = None) -> DataFrame | None:
+    @staticmethod
+    def read_buckets(spark: SparkSession, entry: dict[str, Any],
+                     buckets) -> DataFrame | None:
         """Only the segments of ``buckets`` — the key-pruned scan."""
-        m = self.manifest(version)
         want = set(int(b) for b in buckets)
         paths = [
-            p for b, ps in m.get("buckets", {}).items()
+            p for b, ps in entry.get("buckets", {}).items()
             if int(b) in want for p in ps
         ]
         if not paths:
             return None
-        return _read_parquet(spark, paths, m.get("schema"))
+        return _read_parquet(spark, paths, entry["schema"])
