@@ -21,10 +21,11 @@ entry — what that table's snapshot is made of (``path``, ``history``,
 parent's entry and returns the new one, and ``Manifest.commit`` writes
 the manifest, then atomically replaces HEAD. HEAD is the only
 consistency point, so a crash anywhere before its rename leaves the
-previous version current and whole (the orphaned data dirs and
-manifest of the half-written version are inert and overwritten by the
-next commit of that version). ``read(entry)`` of any version's entry
-is Iceberg's ``VERSION AS OF``; ``Manifest.publish(k)`` is rollback.
+previous version current and whole: no manifest that HEAD can reach
+names the half-written version's data dirs, and its manifest file is
+replaced by the next commit of that version. ``read(entry)`` of any
+version's entry is Iceberg's ``VERSION AS OF``; ``Manifest.publish(k)``
+is rollback.
 
 Checkpoint/resume semantics mirror the reference's periodic whole-CSV
 rewrite (/root/reference/scraper/selenium_scraper.py:134-135,181-182)
@@ -71,12 +72,13 @@ def _check_schema(pinned_json: str | None, schema: T.StructType,
     read time). Refuse it at commit time instead."""
     if pinned_json is None:
         return
-    want = {f.name: f.dataType for f in _schema_from_json(pinned_json).fields}
-    got = {f.name: f.dataType for f in _force_nullable(schema).fields}
-    if got != want:
+    pinned = _schema_from_json(pinned_json)
+    got = _force_nullable(schema)
+    if ({f.name: f.dataType for f in got.fields}
+            != {f.name: f.dataType for f in pinned.fields}):
         raise ValueError(
             f"{what}: delta schema {schema.simpleString()} does not match "
-            f"the pinned {_schema_from_json(pinned_json).simpleString()}"
+            f"the pinned {pinned.simpleString()}"
         )
 
 
